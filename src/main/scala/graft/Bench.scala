@@ -62,7 +62,7 @@ object Bench {
       SparkEntry.queries.foreach { case (_, fn) =>
         try fn(spark, warmDir.getAbsolutePath).write
           .format("noop").mode("overwrite").save()
-        catch { case _: Throwable => () }
+        catch { case scala.util.control.NonFatal(_) => () }
       }
       spark.catalog.clearCache()
     }
@@ -98,7 +98,7 @@ object Bench {
           fn(spark, sfDir).write.format("noop").mode("overwrite").save()
           samples(name) += (System.nanoTime() - t0) / 1e9
         } catch {
-          case e: Throwable =>
+          case scala.util.control.NonFatal(e) =>
             failures(name) = failures.getOrElse(name, 0) + 1
             System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
         }
@@ -158,7 +158,7 @@ object Bench {
         if (f.isFile) Some(new String(
           java.nio.file.Files.readAllBytes(f.toPath), "UTF-8"))
         else None
-      } catch { case _: Throwable => None }
+      } catch { case scala.util.control.NonFatal(_) => None }
     def mapOf(src: String, key: String): Map[String, Double] =
       ("\"" + key + "\":\\{([^}]*)\\}").r.findFirstMatchIn(src)
         .map(_.group(1)).toSeq.flatMap { body =>
@@ -192,11 +192,11 @@ object Bench {
           if (diff.isEmpty && stat.isEmpty) head
           else {
             val md = java.security.MessageDigest.getInstance("SHA-256")
-            val dig = md.digest((diff + " " + stat).getBytes("UTF-8"))
+            val dig = md.digest((diff + "\u0000" + stat).getBytes("UTF-8"))
               .take(6).map(b => f"$b%02x").mkString
             s"$head-dirty-$dig"
           }
-      } catch { case _: Throwable => None }
+      } catch { case scala.util.control.NonFatal(_) => None }
     val keyNow = gitKey()
     val headNow = keyNow.getOrElse("unresolved")
     val sameSf = keyNow.isDefined &&

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.dedup.Dedup
 import graft.engine.BacktestEngine
+import graft.ops.BuildMemo
 import graft.opt.{GridSearch, LocalMACross}
 import graft.sim.Similarity
 import graft.sources.Sources
@@ -56,30 +57,23 @@ object SparkEntry {
   private def tw(s: SparkSession, dir: String, name: String): DataFrame =
     graft.ops.ScaleOps.widen(t(s, dir, name))
 
-  /** Session-memoized materialization of a shared derived frame (the
-    * [[graft.ops.BuildMemo]] discipline): gate rows that re-derive the
-    * same edge list / base split per invocation build it once per
-    * session instead.
-    */
-  private def memoF(df: DataFrame): DataFrame =
-    graft.ops.BuildMemo.frame(df)
-
   private val dec = "decimal(18,2)"
 
   /** Session-memoized backtest fold: bt_backtest_fold / bt_orders /
     * bt_metrics (and bt_tenpct_fold with its own strategy) all derive
     * views of the SAME engine run over the same bars — one fold per
-    * (dir, strategy, capital) per session instead of one per gate row.
-    * The fold output is lambda-bound (mapGroups), so the key is
-    * explicit; the strategy case classes print their parameters, which
-    * is exactly what the key must pin.
+    * (bars, strategy, capital) per session instead of one per gate row.
+    * The strategy case classes print their parameters, which is exactly
+    * what the params must pin.
     */
   private def btRun(s: SparkSession, dir: String,
       strategy: graft.strategy.Strategy,
-      capital: Double): graft.engine.BacktestResult =
-    graft.ops.BuildMemo.valueKeyed(s, s"btfold|$dir|$strategy|$capital") {
-      BacktestEngine.run(Sources.eventsAsBars(s, dir), strategy, capital)
+      capital: Double): graft.engine.BacktestResult = {
+    val bars = Sources.eventsAsBars(s, dir)
+    BuildMemo.value(Seq(bars), "btfold", s"$strategy|$capital") {
+      BacktestEngine.run(bars, strategy, capital)
     }
+  }
 
   /** Golden-fixture directory for the backtest/opt oracles (see Goldens). */
   private def goldensDir: String = Goldens.dir
@@ -108,16 +102,43 @@ object SparkEntry {
     val queries = docs.filter(col("doc_id") % 131 === 0)
       .select(col("doc_id"),
         concat_ws(" ", slice(tk, 1, 8)).as("qtext"))
-    // EXPLICIT key, not the plan key: the scoring plan carries the
-    // (term → df / term → queries) MAP literals, and Spark's MapData
-    // has no value equality — plan-keyed lookups would always miss.
-    // The key carries the input's FILE digest (not just $dir), so a
-    // mid-session rewrite of the corpus can't serve a stale run
-    graft.ops.BuildMemo.frameKeyed(s,
-        s"bm25selfrun|$dir|131|8|k5|maxDf0.95" +
-          s"|${graft.ops.BuildMemo.filesTag(docs)}") {
+    // every parameter is a literal of this one closure, so the tag pins
+    // them all
+    BuildMemo.frame(Seq(docs), "bm25selfrun") {
       graft.text.Retrieval.bm25TopK(docs, "doc_id", "text",
         queries, "doc_id", "qtext", k = 5, maxDfFrac = 0.95)
+    }
+  }
+
+  /** The directed part->supplier co-occurrence edges of a 2% lineitem
+    * part-slice that the gr_* rows share, session-memoized.
+    */
+  private def partSupplierEdges(s: SparkSession, dir: String): DataFrame = {
+    val li = t(s, dir, "lineitem")
+    BuildMemo.frame(Seq(li), "partSupplierEdges") {
+      li.filter(col("l_partkey") % 50 === 0)
+        .select(concat(lit("p"), col("l_partkey")).as("src"),
+          concat(lit("s"), col("l_suppkey")).as("dst"))
+    }
+  }
+
+  /** [[partSupplierEdges]] in both directions (no dangling nodes by
+    * construction), session-memoized.
+    */
+  private def partSupplierGraph(s: SparkSession, dir: String): DataFrame =
+    BuildMemo.frame(Seq(t(s, dir, "lineitem")), "partSupplierGraph") {
+      val li = partSupplierEdges(s, dir)
+      li.union(li.select(col("dst").as("src"), col("src").as("dst")))
+    }
+
+  /** The scored corpus shared by ts_lm_score and ts_lm_buckets,
+    * session-memoized (the build runs its count-table checkpoint job
+    * while constructing the frame).
+    */
+  private def lmScores(s: SparkSession, dir: String): DataFrame = {
+    val docs = t(s, dir, "documents")
+    BuildMemo.frame(Seq(docs), "lmScore") {
+      TextStats.lmScore(docs, "doc_id", "text")
     }
   }
 
@@ -430,8 +451,12 @@ object SparkEntry {
       // artifacts (tiny per-column stat frames; the BuildMemo
       // discipline) — the drift row re-ran two full lineitem
       // aggregation passes per invocation
-      val before = memoF(graft.ops.Profile.profileNumeric(li,
-        Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax")))
+      def profile(df: DataFrame, cols: Seq[String]): DataFrame =
+        BuildMemo.frame(Seq(df), "profileNumeric", cols.mkString(",")) {
+          graft.ops.Profile.profileNumeric(df, cols)
+        }
+      val before = profile(li,
+        Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax"))
       val broken = li.select(
         when(col("l_orderkey") % 1000 === 0, -col("l_quantity"))
           .otherwise(col("l_quantity")).as("l_quantity"),
@@ -439,8 +464,8 @@ object SparkEntry {
         when(col("l_orderkey") % 3 === 0, lit(null))
           .otherwise(col("l_tax")).as("l_tax"),
         col("l_suppkey"))
-      val after = memoF(graft.ops.Profile.profileNumeric(broken,
-        Seq("l_quantity", "l_extendedprice", "l_tax", "l_suppkey")))
+      val after = profile(broken,
+        Seq("l_quantity", "l_extendedprice", "l_tax", "l_suppkey"))
       graft.ops.Profile.profileDrift(before, after, nullRateJump = 0.1)
     }),
     "sc_skew" -> ((s, dir) => {
@@ -1619,10 +1644,8 @@ object SparkEntry {
     "ts_lm_score" -> ((s, dir) => {
       // CCNet-style corpus LM quality score: bigram stupid-backoff model
       // trained on the hash-split train buckets, every doc scored.
-      // memoTag = the gate opts in to the session memo of the scored
-      // table (shared with ts_lm_buckets; key = input plan + files)
-      TextStats.lmScore(t(s, dir, "documents"), "doc_id", "text",
-          memoTag = Some("gate"))
+      // the scored table is a session artifact shared with ts_lm_buckets
+      lmScores(s, dir)
         .select(col("doc_id"), col("n_bigrams"),
           round(col("lm_score"), 6).as("lm_score6"))
         .orderBy(col("doc_id"))
@@ -1689,12 +1712,12 @@ object SparkEntry {
       val fresh = docs
         .filter(col("doc_id") % 3 === 0 || col("doc_id") % 7 === 0)
         .select(col("doc_id"), concat(col("text"), lit(" upd")).as("text"))
-      // the base-index + delta-merge build is session-memoized on its
-      // PLAN (r16 verdict #5 — the stream_batch twin already amortized
-      // its merge); the stats derivation and the probe below stay live
-      val merged = memoF(graft.text.Retrieval.updateBm25Index(
+      // the base-index + delta-merge build is session-memoized inside
+      // updateBm25Index; the stats derivation and the probe below stay
+      // live
+      val merged = graft.text.Retrieval.updateBm25Index(
         graft.text.Retrieval.bm25Index(base, "doc_id", "text"),
-        fresh, "doc_id", "text"))
+        fresh, "doc_id", "text")
       val stats = graft.text.Retrieval.bm25IndexStats(merged)
       val tk = filter(split(lower(col("text")), "\\s+"),
         x => length(x) > 0)
@@ -1724,13 +1747,10 @@ object SparkEntry {
         .select(col("doc_id"), timestamp_seconds(col("doc_id")).as("ts"),
           concat(col("text"), lit(" upd")).as("text"))
       // the stateful-operator replay + settle + merge is session-
-      // memoized under an EXPLICIT key (the flatMapGroupsWithState
-      // plan carries a lambda and never canonicalizes equal across
-      // invocations): rep 1 runs the full streaming-twin lifecycle,
-      // re-invocations reuse its settled merge (round-15 verdict #1)
-      val merged = graft.ops.BuildMemo.frameKeyed(s,
-          s"ts_bm25_stream_batch_merged|$dir" +
-            s"|${graft.ops.BuildMemo.filesTag(docs)}") {
+      // memoized on the corpus it reads: rep 1 runs the full
+      // streaming-twin lifecycle, re-invocations reuse its settled
+      // merge (round-15 verdict #1)
+      val merged = BuildMemo.frame(Seq(docs), "ts_bm25_stream_batch") {
         val updates = graft.streaming.StreamingRetrieval
           .streamingPostingsUpdate(fresh, "doc_id", "ts", "text")
         graft.streaming.StreamingRetrieval
@@ -1776,8 +1796,8 @@ object SparkEntry {
     "ts_lm_buckets" -> ((s, dir) => {
       // CCNet head/middle/tail: per-language thirds by corpus LM score
       // (integer percentile test, rounded-score ranking — bit-stable)
-      TextStats.lmQualityBuckets(t(s, dir, "documents"), "doc_id", "text",
-          "lang", headPct = 33, midPct = 33, memoTag = Some("gate"))
+      TextStats.lmBuckets(t(s, dir, "documents"), lmScores(s, dir),
+          "doc_id", "lang", headPct = 33, midPct = 33)
         .orderBy(col("doc_id"))
     }),
     "bt_orders" -> ((s, dir) => {
@@ -1802,9 +1822,10 @@ object SparkEntry {
       // session-memoized derived daily-index table (the BuildMemo
       // discipline): bt_metrics re-aggregated the full events table per
       // invocation for a bounded one-row-per-day frame
-      val dayAgg = memoF(ev
-        .groupBy(date_trunc("DAY", col("ts")).as("__day"))
-        .agg((dsum(col("value")) / count(lit(1))).as("SP500")))
+      val dayAgg = BuildMemo.frame(Seq(ev), "btDayIndex") {
+        ev.groupBy(date_trunc("DAY", col("ts")).as("__day"))
+          .agg((dsum(col("value")) / count(lit(1))).as("SP500"))
+      }
       // Metrics.compute now makes ONE pass over the daily frame (the
       // covariance folds into the grouped aggregation), so no cache is
       // needed here — the fold output itself is persisted by the engine
@@ -1852,19 +1873,15 @@ object SparkEntry {
       val loadBars: Seq[String] => DataFrame = _ =>
         t(s, dir, "events").select(sym(col("user_id")).as("ticker"),
           col("ts").as("date"), col("value").as("close"))
-      GridSearch.findCommonStocks(docs, "text", tickers, "symbol",
+      // session-memoized (the bt tier's shared-fold discipline) on the
+      // events table that the corpus, tickers and bars all derive from;
+      // every other parameter is a literal of this closure
+      BuildMemo.frame(Seq(ev), "opt_common_stocks") {
+        GridSearch.findCommonStocks(docs, "text", tickers, "symbol",
           Seq("spy"), 3, loadBars,
           st => LocalMACross(st(0).toInt, st(1).toInt), 10000.0,
-          Seq((3, 9, 2), (10, 30, 10)),
-          // session-memoized grid fold (the bt tier's shared-fold
-          // discipline): the tag pins the corpus/bars source (dir +
-          // events file digest — docs, tickers and bars all derive
-          // from the events table), the blacklist+k of the leaderboard,
-          // and strategy + grid + capital — everything either memo
-          // inside findCommonStocks depends on
-          memoTag = Some(s"$dir|spy|3|macross|3,9,2|10,30,10|10000" +
-            s"|${graft.ops.BuildMemo.filesTag(ev)}"))
-        .select(col("ticker"), col("mentions"), col("best_net_worth"))
+          Seq((3, 9, 2), (10, 30, 10)))
+      }.select(col("ticker"), col("mentions"), col("best_net_worth"))
         .orderBy(col("ticker"))
     }),
 
@@ -1921,12 +1938,7 @@ object SparkEntry {
       // lineitem part-slice, both directions (no dangling nodes by
       // construction), 6 PageRank rounds — EXACT doubles, the fold
       // order is pinned so no rounding is needed
-      val li = memoF(t(s, dir, "lineitem")
-        .filter(col("l_partkey") % 50 === 0)
-        .select(concat(lit("p"), col("l_partkey")).as("src"),
-          concat(lit("s"), col("l_suppkey")).as("dst")))
-      val both = memoF(li.union(
-        li.select(col("dst").as("src"), col("src").as("dst"))))
+      val both = partSupplierGraph(s, dir)
       graft.graph.GraphOps.pageRank(both, "src", "dst", iterations = 6)
         .orderBy(col("node"))
     }),
@@ -1934,12 +1946,7 @@ object SparkEntry {
       // community detection over the same co-occurrence graph as
       // gr_pagerank: 4 synchronous label-propagation rounds, integer
       // votes, (count desc, label asc) argmin — fully deterministic
-      val li = memoF(t(s, dir, "lineitem")
-        .filter(col("l_partkey") % 50 === 0)
-        .select(concat(lit("p"), col("l_partkey")).as("src"),
-          concat(lit("s"), col("l_suppkey")).as("dst")))
-      val both = memoF(li.union(
-        li.select(col("dst").as("src"), col("src").as("dst"))))
+      val both = partSupplierGraph(s, dir)
       graft.graph.GraphOps.labelPropagation(both, "src", "dst",
           iterations = 4)
         .orderBy(col("node"))
@@ -1973,20 +1980,17 @@ object SparkEntry {
         .select(col("doc_id"),
           concat_ws(" ", slice(tk, 1, 8)).as("qtext"))
       // both constituent retrieval runs are session-memoized artifacts
-      // (the bm25SelfRun discipline; the sparse run needs an explicit
-      // key — its plan carries value-inequatable map literals)
-      val sparse = graft.ops.BuildMemo.frameKeyed(s,
-          s"bm25rrfsparse|$dir|lt8|8|k5|maxDf0.95" +
-            s"|${graft.ops.BuildMemo.filesTag(docs)}") {
+      // keyed on the table each reads (the bm25SelfRun discipline)
+      val sparse = BuildMemo.frame(Seq(docs), "bm25rrfsparse") {
         graft.text.Retrieval.bm25TopK(docs, "doc_id", "text",
           queries, "doc_id", "qtext", k = 5, maxDfFrac = 0.95)
       }.select(col("query_id"), col("doc_id").as("id"), col("rank"))
       val emb = t(s, dir, "embeddings")
         .withColumn("embedding", col("embedding").cast("array<double>"))
-      val dense = memoF(
-          Similarity.bruteForceTopK(emb, "vec_id", "embedding",
-            emb.filter(col("vec_id") < 8), "vec_id", "embedding", k = 5))
-        .select(col("query_id"), col("vec_id").as("id"), col("rank"))
+      val dense = BuildMemo.frame(Seq(emb), "rrfdense") {
+        Similarity.bruteForceTopK(emb, "vec_id", "embedding",
+          emb.filter(col("vec_id") < 8), "vec_id", "embedding", k = 5)
+      }.select(col("query_id"), col("vec_id").as("id"), col("rank"))
       graft.text.Retrieval.rrfFusion(Seq(sparse, dense), "query_id",
           "id", "rank", k = 5)
         .select(col("query_id"), col("vec_id").as("id"),
@@ -2015,11 +2019,7 @@ object SparkEntry {
       // graph profile: in/out degree per node of the directed
       // part->supplier co-occurrence graph (one aggregation per
       // direction, full-outer zero-filled)
-      val li = memoF(t(s, dir, "lineitem")
-        .filter(col("l_partkey") % 50 === 0)
-        .select(concat(lit("p"), col("l_partkey")).as("src"),
-          concat(lit("s"), col("l_suppkey")).as("dst")))
-      graft.graph.GraphOps.degrees(li, "src", "dst")
+      graft.graph.GraphOps.degrees(partSupplierEdges(s, dir), "src", "dst")
         .orderBy(col("node"))
     }),
     "gr_triangles" -> ((s, dir) => {
@@ -2034,9 +2034,11 @@ object SparkEntry {
         .distinct()
       // the pair-join edge derivation is the row's dominant cost —
       // session-memoized (round-15 verdict #2)
-      val e = memoF(li.as("x").join(li.as("y"),
-          col("x.o") === col("y.o") && col("x.p") < col("y.p"))
-        .select(col("x.p").as("src"), col("y.p").as("dst")))
+      val e = BuildMemo.frame(Seq(li), "partPairEdges") {
+        li.as("x").join(li.as("y"),
+            col("x.o") === col("y.o") && col("x.p") < col("y.p"))
+          .select(col("x.p").as("src"), col("y.p").as("dst"))
+      }
       graft.graph.GraphOps.triangleCounts(e, "src", "dst")
         .orderBy(col("node"))
     }),
@@ -2191,12 +2193,10 @@ object SparkEntry {
       val fresh = emb.filter(isFresh)
         .select(col("vec_id"), timestamp_seconds(col("vec_id")).as("ts"),
           reverse(col("embedding")).as("embedding"))
-      // session-memoized under an explicit key (lambda-bound stateful
-      // plan — see ts_bm25_stream_batch): rep 1 runs the streaming
-      // twin, re-invocations reuse the settled merge
-      val merged = graft.ops.BuildMemo.frameKeyed(s,
-          s"sim_ivfadc_stream_batch_merged|$dir" +
-            s"|${graft.ops.BuildMemo.filesTag(emb)}") {
+      // session-memoized on the corpus it reads (see
+      // ts_bm25_stream_batch): rep 1 runs the streaming twin,
+      // re-invocations reuse the settled merge
+      val merged = BuildMemo.frame(Seq(emb), "sim_ivfadc_stream_batch") {
         val updates = graft.streaming.StreamingAnn.streamingIndexUpdate(
           fresh, "vec_id", "ts", "embedding", cents, cbs)
         graft.streaming.StreamingAnn.mergeSettledIndex(index,
@@ -2509,12 +2509,7 @@ object SparkEntry {
       // seed-personalized PageRank (TrustRank): teleport mass lands on
       // the %100 part nodes only — proximity-to-seed trust scores over
       // the same co-occurrence graph as gr_pagerank; EXACT doubles
-      val li = memoF(t(s, dir, "lineitem")
-        .filter(col("l_partkey") % 50 === 0)
-        .select(concat(lit("p"), col("l_partkey")).as("src"),
-          concat(lit("s"), col("l_suppkey")).as("dst")))
-      val both = memoF(li.union(
-        li.select(col("dst").as("src"), col("src").as("dst"))))
+      val both = partSupplierGraph(s, dir)
       val seeds = t(s, dir, "lineitem")
         .filter(col("l_partkey") % 100 === 0)
         .select(concat(lit("p"), col("l_partkey")).as("seed"))

@@ -52,7 +52,7 @@ object Verify {
           System.err.println(s"[verify] WARNING: $name wrote 0 rows — " +
             "the oracle compare on this query is VACUOUS")
         }
-      } catch { case e: Throwable =>
+      } catch { case scala.util.control.NonFatal(e) =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }

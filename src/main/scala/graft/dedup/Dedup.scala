@@ -221,7 +221,7 @@ object Dedup {
     // containment discipline — threshold is NOT in the key because
     // candidates don't depend on it); the exact sorted-long-jaccard
     // verification below stays LIVE per call
-    val pairIds = graft.ops.BuildMemo.frameFor(Seq(df), "minhashCands",
+    val pairIds = graft.ops.BuildMemo.frame(Seq(df), "minhashCands",
         params = s"$idCol|$textCol|$shingleSize|$numHashes|$bands" +
           s"|$maxBucket") {
       minhashCandidates(df, idCol, textCol, shingleSize, numHashes,
@@ -293,13 +293,13 @@ object Dedup {
     */
   def minhashSignatures(df: DataFrame, idCol: String, textCol: String,
       shingleSize: Int = 3, numHashes: Int = 32): DataFrame =
-    // session-memoized (BuildMemo.frameFor on the input plan): the
+    // session-memoized (BuildMemo.frame on the input plan): the
     // signature table IS the persistable index artifact — the
     // incremental probe, the exact-verify probe and the streaming twin
     // all derive from the same signature build over the same corpus
     // read, and the scan-stage signature computation is the expensive
     // pass. Streams / mutable inputs fall through to the plain build.
-    graft.ops.BuildMemo.frameFor(Seq(df), "minhashSigs",
+    graft.ops.BuildMemo.frame(Seq(df), "minhashSigs",
         params = s"$idCol|$textCol|$shingleSize|$numHashes") {
       df.filter(col(idCol).isNotNull)
         .select(col(idCol).as("id"),
@@ -339,7 +339,7 @@ object Dedup {
     // "Materialize this once" is the operator's own contract (see the
     // scaladoc) — session-memoized on the corpus-sig plan so the
     // streaming twin's per-invocation probe table build is shared
-    graft.ops.BuildMemo.frameFor(Seq(corpusSigs), "minhashBucketTable",
+    graft.ops.BuildMemo.frame(Seq(corpusSigs), "minhashBucketTable",
         params = s"$numHashes|$bands|$maxBucket") {
       val banded = corpusSigs.filter(col("id").isNotNull).select(col("id"),
         posexplode(bandHashes(col("sig"), numHashes, bands))
@@ -413,7 +413,7 @@ object Dedup {
     // session-memoized on the corpus-sig plan so the estimate-only and
     // exact-verified probes (and every bench rep) share one banding +
     // capping aggregation over the same index
-    val buckets = graft.ops.BuildMemo.frameFor(Seq(corpusSigs),
+    val buckets = graft.ops.BuildMemo.frame(Seq(corpusSigs),
         "incrBuckets", params = s"$numHashes|$bands|$maxBucket") {
       cappedBuckets(corpusSigs, numHashes, bands, maxBucket)
     }
@@ -531,7 +531,7 @@ object Dedup {
     // containment/jaccard candidates discipline, r16 verdict #4 —
     // maxHamming is NOT in the key because candidates don't depend on
     // it); the hamming verification below stays LIVE per call
-    val pairs = graft.ops.BuildMemo.frameFor(Seq(df), "simhashCands",
+    val pairs = graft.ops.BuildMemo.frame(Seq(df), "simhashCands",
         params = s"$idCol|$textCol|$chunks|$maxBucket") {
       simhashCandidates(df, idCol, textCol, chunks, maxBucket)
     }
@@ -553,7 +553,7 @@ object Dedup {
     // the (id, 8-byte fingerprint) frame is the persistable SimHash
     // index artifact — session-memoized and widened like the MinHash
     // signature table (the scan-stage fingerprint is the expensive pass)
-    val withFp = graft.ops.BuildMemo.frameFor(Seq(df), "simhashFp",
+    val withFp = graft.ops.BuildMemo.frame(Seq(df), "simhashFp",
         params = s"$idCol|$textCol") {
       graft.ops.ScaleOps.widen(df.filter(col(idCol).isNotNull)
           .select(col(idCol), col(textCol)))
@@ -592,14 +592,14 @@ object Dedup {
     * parallelism first ([[graft.ops.ScaleOps.widen]] — the driver
     * testdata ships one row group per table, so the un-widened scan
     * computes every shingle on ONE core), then cuts + session-memoizes
-    * it ([[graft.ops.BuildMemo.frameFor]]); at 100 TB the widen no-ops
+    * it ([[graft.ops.BuildMemo.frame]]); at 100 TB the widen no-ops
     * (the corpus is already wide) and the materialized frame is the
     * fingerprint artifact a production pipeline persists anyway.
     * Non-memoizable inputs keep the previous lazy build.
     */
   private def hashedShingleFrame(df: DataFrame, idCol: String,
       textCol: String, shingleSize: Int): DataFrame =
-    graft.ops.BuildMemo.frameFor(Seq(df), "hashedShingles",
+    graft.ops.BuildMemo.frame(Seq(df), "hashedShingles",
         params = s"$idCol|$textCol|$shingleSize") {
       // null ids dropped HERE so the shared artifact is null-clean by
       // construction (today every consumer inner-joins against a
@@ -648,7 +648,7 @@ object Dedup {
     // the PPJoin-pruned candidate id list is a session-memoized build
     // (the containment-candidates discipline); the exact set-Jaccard
     // verification below stays LIVE per call
-    val pairIds = graft.ops.BuildMemo.frameFor(Seq(df), "jaccardCands",
+    val pairIds = graft.ops.BuildMemo.frame(Seq(df), "jaccardCands",
         params = s"$idCol|$textCol|$shingleSize|$threshold|$maxDf") {
       posting.join(rare.select("g"), Seq("g"))
         .groupBy("g")
@@ -704,7 +704,7 @@ object Dedup {
     // the pruned candidate list (a few hundred id pairs after the
     // lossless bound at sf0.1) is a session-memoized build; the exact
     // array-intersection verification below stays LIVE per call
-    val pruned = graft.ops.BuildMemo.frameFor(Seq(sh),
+    val pruned = graft.ops.BuildMemo.frame(Seq(sh),
         "containmentCands", params = s"$threshold|$maxDf") {
       containmentCandidates(sh, threshold, maxDf)
     }
@@ -899,7 +899,7 @@ object Dedup {
     // counting bound re-ran per invocation; the banded DP itself stays
     // LIVE on every call (exact verification is never served from a
     // memo). Non-memoizable inputs fall through to the same lazy plan.
-    val candPairs = graft.ops.BuildMemo.frameFor(Seq(df), "editdistCands",
+    val candPairs = graft.ops.BuildMemo.frame(Seq(df), "editdistCands",
         params = s"$idCol|$textCol|$langCol|$lenBucket|$prefixLen|" +
           s"$maxDist|$maxBucket") {
       editDistanceCandidatesFrom(capped, maxDist)
@@ -1157,7 +1157,7 @@ object Dedup {
 
   /** MinHash near-dup clustering (banded-LSH pairs → connected
     * components), session-memoized on the input plan + every parameter
-    * ([[graft.ops.BuildMemo.frameFor]]): the min-id-survivor policy
+    * ([[graft.ops.BuildMemo.frame]]): the min-id-survivor policy
     * ([[dropNearDups]]), the quality-survivor policy
     * ([[dropNearDupsKeepBest]]) and the leakage-safe group split all
     * cluster the SAME pair list over the same corpus — the round-15
@@ -1170,7 +1170,7 @@ object Dedup {
   def nearDupComponents(df: DataFrame, idCol: String, textCol: String,
       shingleSize: Int = 3, numHashes: Int = 32, bands: Int = 8,
       threshold: Double = 0.8, maxBucket: Int = 64): DataFrame =
-    graft.ops.BuildMemo.frameFor(Seq(df), "nearDupCC",
+    graft.ops.BuildMemo.frame(Seq(df), "nearDupCC",
         params = s"$idCol|$textCol|$shingleSize|$numHashes|$bands|" +
           s"$threshold|$maxBucket") {
       connectedComponents(minhashNearDups(df, idCol, textCol, shingleSize,
@@ -1276,14 +1276,14 @@ object Dedup {
     * `maxDocs` distinct documents: the corpus-duplication index the
     * scrub, the span report and the duplication profile all derive
     * from. Session-memoized on the input plan + parameters
-    * ([[graft.ops.BuildMemo.frameFor]]); bounded by the corpus'
+    * ([[graft.ops.BuildMemo.frame]]); bounded by the corpus'
     * duplicated-text volume. Built positions-free (the aggregate never
     * needed them); consumers join their own positional gram streams
     * against it.
     */
   private def repeatedGramSet(df: DataFrame, idCol: String,
       textCol: String, n: Int, maxDocs: Int): DataFrame =
-    graft.ops.BuildMemo.frameFor(Seq(df), "repeatedGrams",
+    graft.ops.BuildMemo.frame(Seq(df), "repeatedGrams",
         params = s"$idCol|$textCol|$n|$maxDocs") {
       df.select(col(idCol), explode(
           graft.functions.HashFunctions.rawWordGramHashes(col(textCol), n))
@@ -1324,27 +1324,24 @@ object Dedup {
           Window.partitionBy("__h").orderBy(col(idCol), col("__p"))))
         .filter(col("__rn") > 1)
     // covered word positions of matched grams, once per (doc, position).
-    // MATERIALIZED once (reliable-or-local checkpoint, the same
-    // discipline as `cut` everywhere else): `removed` feeds four
+    // MATERIALIZED once when the input is memoizable (the BuildMemo
+    // miss runs the same checkpoint as `cut`): `removed` feeds four
     // consumers (perDoc, the semi-join, the anti-join, the final left
     // join) and Spark does not reuse the exchange across them — without
     // the cut each consumer re-runs the full gram explode + repeated-gram
     // aggregate (verified in the physical plan: four identical subtrees).
     // The table is bounded by the corpus' DUPLICATED-text volume ≪ corpus
-    // — and SESSION-memoized (BuildMemo.frameFor on the input plan +
+    // — and SESSION-memoized (BuildMemo.frame on the input plan +
     // parameters): it is the scrubber's matched-position audit artifact,
     // rebuilt per invocation before this round.
     val removedPlan = scrubOcc
       .select(col(idCol).as("__rid"),
         explode(sequence(col("__p"), col("__p") + lit(n - 1))).as("__rp"))
       .distinct()
-    val removed =
-      if (graft.ops.BuildMemo.memoizable(df))
-        graft.ops.BuildMemo.frameFor(Seq(df), "scrubPositions",
-          params = s"$idCol|$textCol|$n|$maxDocs|$keepFirstCopy") {
-          removedPlan
-        }
-      else cut(removedPlan) // non-memoizable inputs keep the plain cut
+    val removed = graft.ops.BuildMemo.frame(Seq(df), "scrubPositions",
+        params = s"$idCol|$textCol|$n|$maxDocs|$keepFirstCopy") {
+      removedPlan
+    }
     val perDoc = removed.groupBy("__rid").agg(count(lit(1)).as("n_removed"))
     // rebuild ONLY touched documents; everything else keeps its text
     val words = toks

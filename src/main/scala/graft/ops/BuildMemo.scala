@@ -1,38 +1,50 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 /** Session-scoped memo for EXPENSIVE BUILD ARTIFACTS — postings
-  * indexes, trained quantizer models, derived edge frames — the
-  * [[graft.sources.Sources.readTable]] discipline extended from "don't
-  * re-list the same parquet directory per query" to "don't re-build
-  * the same index/model per query" (round-15 verdict #1/#2: the
-  * composed lifecycle gate rows each re-ran tokenize→postings→stats /
-  * train→encode builds that sibling queries had already paid for).
+  * indexes, trained quantizer models, backtest folds, candidate lists —
+  * the [[graft.sources.Sources.readTable]] discipline extended from
+  * "don't re-list the same parquet directory per query" to "don't
+  * re-build the same index/model per query".
   *
-  * Keying. A FRAME memo keys on the input's CANONICALIZED logical
-  * plan (plus the caller's params string): Spark's own
-  * exchange/subquery-reuse equality — two plans that canonicalize
-  * equal compute the same result by construction, so a hit is
-  * result-identical to a miss (BuildMemoSpec pins this). A VALUE memo
-  * (driver-side models, collected stats) keys the same way on the
-  * frame the value derives from.
+  * One keying rule. Every build is keyed on
   *
-  * Safety. Plan-keyed reuse is only sound when the plan pins its
-  * data. Memoization therefore engages ONLY when every leaf of the
-  * canonicalized plan is immutable-by-construction:
+  *  - the caller's tag (which build this is) and params string (every
+  *    parameter the build reads besides its input frames),
+  *  - the CANONICALIZED analyzed plans of its INPUT frames, and
+  *  - the digest of those inputs' file listings, computed here.
   *
-  *  - `LogicalRelation` (a file-source read — the relation captures
-  *    the file listing snapshot),
-  *  - `LocalRelation` / `OneRowRelation` / `Range` (data or bounds
-  *    embedded in the plan),
-  *  - `LogicalRDD` (a checkpointed frame — canonicalization compares
-  *    RDD identity, so distinct materializations never cross-hit).
+  * Why input plans, not the output plan: a result depends on exactly
+  * its inputs plus its parameters, so that is what the key names.
+  * Output plans are also often unusable as keys — MapData literals
+  * have no value equality and lambda-bound operators (`mapGroups`,
+  * `flatMapGroupsWithState`) never canonicalize equal — and some
+  * builds run Spark jobs while CONSTRUCTING their result, which an
+  * output-plan key would re-pay on every hit. Input plans are plain
+  * reads and projections and carry neither. Two inputs that
+  * canonicalize equal read the same data by construction, so a hit is
+  * result-identical to a miss (BuildMemoSpec pins this).
   *
-  * Anything else — streaming sources, in-memory tables whose content
-  * mutates between reads, hive relations — falls through to a plain
-  * build, bit-for-bit the unmemoized behavior. `df.isStreaming`
-  * short-circuits the same way.
+  * Why the file digest: two file-source relations over the same root
+  * path canonicalize EQUAL even after the directory is rewritten, so
+  * the concrete file names join the key. Spark-written data carries
+  * UUID part-file names, making any overwrite a new key. An external
+  * writer reusing identical file names in place is the residual
+  * staleness window; that is the documented
+  * [[graft.sources.Sources.invalidate]] case.
+  *
+  * One fallback. Plan-keyed reuse is only sound when the plan pins its
+  * data, so memoization engages ONLY when every input is a batch frame
+  * whose analyzed-plan leaves are immutable by construction:
+  * `LogicalRelation` (file-source read), `LocalRelation` /
+  * `OneRowRelation` / `Range` (data or bounds embedded in the plan) or
+  * `LogicalRDD` (a checkpointed frame — canonicalization compares RDD
+  * identity, so distinct materializations never cross-hit). Otherwise
+  * — streaming sources, mutable in-memory or hive tables, no inputs at
+  * all — the build runs and is returned unchanged, bit-for-bit the
+  * unmemoized behavior.
   *
   * Lifetime. Entries are LRU-bounded (a long-lived service cycling
   * corpora cannot pin unbounded checkpoint blocks; evicted frames
@@ -40,8 +52,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * and the whole memo drops on [[clear]] —
   * [[graft.sources.Sources.invalidate]] calls it, so the one hook a
   * dataset-rewriting caller must already use covers derived builds
-  * too. Like readTable, the memo otherwise assumes source paths are
-  * immutable within a session.
+  * too.
   */
 object BuildMemo {
 
@@ -52,8 +63,7 @@ object BuildMemo {
   private val MaxEntries = 256
 
   private final case class Key(session: SparkSession, tag: String,
-    plans: Seq[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan],
-    params: String)
+    plans: Seq[LogicalPlan], params: String, files: String)
 
   /** access-ordered LRU; all access synchronized (builds run OUTSIDE
     * the lock — a racing double-build is benign, both sides produce
@@ -82,41 +92,10 @@ object BuildMemo {
   private val SafeLeaves = Set("LogicalRelation", "LocalRelation",
     "OneRowRelation", "Range", "LogicalRDD")
 
-  /** A frame is memoizable iff its canonicalized plan is rooted in
-    * immutable leaves only (see the header) and it is not streaming.
-    */
-  private[graft] def memoizable(df: DataFrame): Boolean =
+  private def memoizable(df: DataFrame): Boolean =
     !df.isStreaming && df.queryExecution.analyzed.collectLeaves()
       .forall(l => SafeLeaves.contains(l.getClass.getSimpleName))
 
-  private def lookup[T <: AnyRef](key: Key)(build: => T): T = {
-    val cached = cache.synchronized { cache.get(key) }
-    cached match {
-      case hit: AnyRef if hit ne null =>
-        hitCount.incrementAndGet()
-        hit.asInstanceOf[T]
-      case _ =>
-        missCount.incrementAndGet()
-        val built = build
-        cache.synchronized {
-          // first writer wins: a racing build of the same key must
-          // not leave two competing materializations in circulation
-          val prev = cache.get(key)
-          if (prev ne null) prev.asInstanceOf[T]
-          else { cache.put(key, built); built }
-        }
-    }
-  }
-
-  /** Digest of every input's leaf FILE LISTING: two LogicalRelations
-    * over the same root path compare canonically EQUAL even after the
-    * directory is rewritten (InMemoryFileIndex equality is by root
-    * paths), so the concrete files must join the key — Spark-written
-    * data carries UUID part-file names, making any overwrite a new
-    * key. An external writer reusing identical file names in place is
-    * the residual staleness window; that is the documented
-    * [[graft.sources.Sources.invalidate]] case.
-    */
   private def filesDigest(dfs: Seq[DataFrame]): String = {
     val md = java.security.MessageDigest.getInstance("MD5")
     dfs.foreach(_.inputFiles.sorted
@@ -124,86 +103,55 @@ object BuildMemo {
     md.digest().map(b => f"$b%02x").mkString
   }
 
-  /** The file-listing digest as a tag fragment for EXPLICIT-key memos
-    * ([[frameKeyed]] / [[valueKeyed]]): a caller keying on a directory
-    * path alone serves stale frames after a mid-session rewrite of the
-    * data under it; appending this digest makes any rewrite (Spark
-    * part-file names are UUIDs) a new key, matching the plan-keyed
-    * memos' behavior.
+  /** The key of a build over `inputs`, or None when the fallback
+    * applies (see the header).
     */
-  def filesTag(dfs: DataFrame*): String = filesDigest(dfs)
+  private def keyOf(inputs: Seq[DataFrame], tag: String,
+      params: String): Option[Key] =
+    if (inputs.isEmpty || !inputs.forall(memoizable)) None
+    else Some(Key(inputs.head.sparkSession, tag,
+      inputs.map(_.queryExecution.analyzed.canonicalized), params,
+      filesDigest(inputs)))
 
-  private def keyOf(df: DataFrame, tag: String, extra: Seq[DataFrame],
-      params: String): Key = {
-    val inputs = df +: extra
-    Key(df.sparkSession, tag,
-      inputs.map(_.queryExecution.analyzed.canonicalized),
-      s"$params|${filesDigest(inputs)}")
+  private def lookup[T <: AnyRef](key: Key)(build: => T): T = {
+    val cached = cache.synchronized { cache.get(key) }
+    if (cached ne null) {
+      hitCount.incrementAndGet()
+      cached.asInstanceOf[T]
+    } else {
+      missCount.incrementAndGet()
+      val built = build
+      cache.synchronized {
+        // first writer wins: a racing build of the same key must not
+        // leave two competing materializations in circulation
+        val prev = cache.get(key)
+        if (prev ne null) prev.asInstanceOf[T]
+        else { cache.put(key, built); built }
+      }
+    }
   }
 
-  /** Memoized MATERIALIZATION of `df`: on miss, [[Lineage.cut]] runs
-    * once and the checkpointed frame is retained; on hit the SAME
-    * frame returns — zero jobs. Falls back to a plain (unmemoized)
-    * cut when the plan is not memoizable.
+  /** Memoized frame derived from `inputs`: on a miss the build runs
+    * once and its result is materialized ([[Lineage.cut]]) and
+    * retained; a hit returns the SAME frame — zero jobs. To memoize the
+    * materialization of a frame `x` itself, pass it as both:
+    * `frame(Seq(x), tag)(x)`.
     */
-  def frame(df: DataFrame, params: String = ""): DataFrame =
-    if (!memoizable(df)) Lineage.cut(df)
-    else lookup(keyOf(df, "frame", Nil, params)) { Lineage.cut(df) }
-
-  /** Memoized build of a frame DERIVED from `inputs` — for expensive
-    * builds (iterative CC label propagation, LM scoring with its
-    * internal count-table checkpoint) that run Spark jobs while
-    * CONSTRUCTING their result frame, so keying on the OUTPUT plan
-    * (as [[frame]] does) would re-pay those construction jobs on
-    * every hit. Keys on the input plans + params exactly like
-    * [[value]]; the built frame is cut once and retained. Falls back
-    * to a plain (unmemoized, uncut) build when any input is not
-    * memoizable — bit-for-bit the unmemoized behavior.
-    */
-  def frameFor(inputs: Seq[DataFrame], tag: String, params: String = "")
+  def frame(inputs: Seq[DataFrame], tag: String, params: String = "")
       (build: => DataFrame): DataFrame =
-    if (inputs.isEmpty || !inputs.forall(memoizable)) build
-    else lookup(keyOf(inputs.head, s"framefor|$tag", inputs.tail,
-      params)) { Lineage.cut(build) }
-
-  /** [[frame]] under an EXPLICIT key instead of the plan key — for
-    * builds whose plans carry non-canonicalizable parts (lambda-bound
-    * operators like flatMapGroupsWithState in batch mode, where two
-    * textually identical plans never compare equal). The caller owns
-    * key hygiene: the tag must pin everything the build depends on
-    * (the gate rows key on query name + sf dir). Skips memoization —
-    * plain cut — for streaming frames.
-    */
-  def frameKeyed(spark: SparkSession, tag: String)
-      (build: => DataFrame): DataFrame =
-    lookup(Key(spark, s"framekeyed|$tag", Nil, "")) {
-      val df = build
-      if (df.isStreaming) df else Lineage.cut(df)
+    keyOf(inputs, s"frame|$tag", params) match {
+      case Some(k) => lookup(k)(Lineage.cut(build))
+      case None => build
     }
 
-  /** [[value]] under an EXPLICIT key — the value-shaped twin of
-    * [[frameKeyed]], for builds whose result is not a single frame
-    * (e.g. a backtest fold result carrying daily/orders views) or
-    * whose plans carry non-canonicalizable lambda-bound operators.
-    * The caller owns key hygiene: the tag must pin everything the
-    * build depends on (input path, parameters). Like frameKeyed, the
-    * memo assumes source paths are immutable within a session
-    * ([[graft.sources.Sources.invalidate]] clears it otherwise).
+  /** Memoized driver-side VALUE derived from `inputs`: trained models,
+    * collected stats, backtest fold results. Values must be treated as
+    * immutable by all callers.
     */
-  def valueKeyed[T <: AnyRef](spark: SparkSession, tag: String)
-      (build: => T): T =
-    lookup(Key(spark, s"valuekeyed|$tag", Nil, ""))(build)
-
-  /** Memoized driver-side VALUE derived from `df` (+ optional extra
-    * input frames): trained models, collected stats/term tables. The
-    * caller's `tag`+`params` disambiguate different derivations of
-    * the same input. Values must be treated as immutable by all
-    * callers. Falls back to a plain build when any input is not
-    * memoizable.
-    */
-  def value[T <: AnyRef](df: DataFrame, tag: String,
-      extra: Seq[DataFrame] = Nil, params: String = "")
-      (build: => T): T =
-    if (!(df +: extra).forall(memoizable)) build
-    else lookup(keyOf(df, s"value|$tag", extra, params)) { build }
+  def value[T <: AnyRef](inputs: Seq[DataFrame], tag: String,
+      params: String = "")(build: => T): T =
+    keyOf(inputs, s"value|$tag", params) match {
+      case Some(k) => lookup(k)(build)
+      case None => build
+    }
 }

@@ -218,7 +218,7 @@ object JoinPlanner {
     require(keyCols.nonEmpty, "keyCols must be non-empty")
     require(hotFactor > 0, s"hotFactor must be positive, got $hotFactor")
     validateCms(cmsDepth, cmsWidth)
-    BuildMemo.value(large, "joinplanner.measure", Seq(small),
+    BuildMemo.value(Seq(large, small), "joinplanner.measure",
       s"${keyCols.mkString(",")}|$hotFactor|$estimate|$cmsDepth|$cmsWidth") {
       val (smallRows, cmsS) =
         measureSmall(small, keyCols, estimate, cmsDepth, cmsWidth)

@@ -97,8 +97,12 @@ object LocalBacktest {
 
   /** Full local backtest → final net worth. Bars must be date-sorted.
     * Stop-loss scans see every bar (observeBar over the full series).
-    * The net-worth fold adds terms in date order, matching the pandas
-    * cumsum association (reference strats.py:567-579).
+    * The net-worth fold follows the reference's pandas semantics
+    * (strats.py:567-579), exactly as [[BacktestEngine.withNetWorth]]
+    * does: terms add in date order; `cumsum(skipna=True)` skips NaN
+    * terms (a buy at a NaN pre-IPO price) and reads NaN only when the
+    * last bar's own term is NaN; `shares_owned` is forward-filled over
+    * NaN snapshots, 0 before the first.
     */
   def finalNetWorth(ticker: String, dates: Array[Timestamp],
       closes: Array[Double], strategy: LocalStrategy,
@@ -122,13 +126,22 @@ object LocalBacktest {
     var cumBuy = 0.0
     var cumSell = 0.0
     fold.trades.foreach { t =>
-      t.buy_shares.foreach(s => cumBuy += s * closeAt(t.date))
-      t.sell_shares.foreach(s => cumSell += s * closeAt(t.date))
+      t.buy_shares.map(_ * closeAt(t.date)).filterNot(_.isNaN)
+        .foreach(cumBuy += _)
+      t.sell_shares.map(_ * closeAt(t.date)).filterNot(_.isNaN)
+        .foreach(cumSell += _)
     }
+    // the last bar's own terms (0 shares on a non-trade day)
+    val lastDay = fold.trades.lastOption.filter(_.date.equals(dates.last))
+    def atLast(cum: Double, shares: Option[Double]): Double =
+      if ((shares.getOrElse(0.0) * closes.last).isNaN) Double.NaN else cum
+    val owned = session.orders.sharesOwned.filterNot(_._2.isNaN)
     val sharesOwned =
-      if (session.orders.sharesOwned.isEmpty) 0.0
-      else session.orders.sharesOwned.maxBy(r => graft.model.Time.epochNanos(r._1))._2
-    sharesOwned * closes.last - cumBuy + cumSell + initialAmount
+      if (owned.isEmpty) 0.0
+      else owned.maxBy(r => graft.model.Time.epochNanos(r._1))._2
+    sharesOwned * closes.last -
+      atLast(cumBuy, lastDay.flatMap(_.buy_shares)) +
+      atLast(cumSell, lastDay.flatMap(_.sell_shares)) + initialAmount
   }
 }
 
@@ -244,24 +257,22 @@ object GridSearch {
       loadBars: Seq[String] => DataFrame,
       mkStrategy: Seq[Double] => LocalStrategy, initialAmount: Double,
       ranges: Seq[(Double, Double, Double)],
-      gridChunks: Int = 1, memoTag: Option[String] = None): DataFrame = {
-    // the k-row mention leaderboard is consumed twice per call (the
-    // symbols collect AND the final broadcast join, whose lazy side
-    // would otherwise re-run the corpus regex scan at execution) — with
-    // a memoTag it is session-memoized like the grid fold below
+      gridChunks: Int = 1): DataFrame = {
+    // the k-row mention leaderboard is consumed twice (the symbols AND
+    // the final broadcast join): it is collected ONCE and the join side
+    // is rebuilt from the collected rows, so the corpus regex scan runs
+    // once per call
+    val spark = docs.sparkSession
     val top0 = graft.text.TextPipeline.topTickerMentions(docs, textCol,
-      tickers, tickerCol, blacklist, k)
-    val top = memoTag match {
-      case Some(tag) => graft.ops.BuildMemo.frameKeyed(docs.sparkSession,
-        s"commonstockstop|$tag") { top0 }
-      case None => top0
-    }
-    val symbols = top.select(col("token")).collect().map(_.getString(0)).toSeq
+      tickers, tickerCol, blacklist, k).select(col("token"), col("cnt"))
+    val topRows = top0.collect()
+    val top = spark.createDataFrame(java.util.Arrays.asList(topRows: _*),
+      top0.schema)
+    val symbols = topRows.map(_.getString(0)).toSeq
     // a mention-less corpus short-circuits to an empty result BEFORE the
     // connector is invoked — a loader handed an empty symbol list could
     // throw or issue a nonsense request
     if (symbols.isEmpty) {
-      val spark = docs.sparkSession
       return spark.createDataFrame(spark.sparkContext.emptyRDD[
           org.apache.spark.sql.Row],
         org.apache.spark.sql.types.StructType(Seq(
@@ -276,26 +287,7 @@ object GridSearch {
             org.apache.spark.sql.types.DoubleType))))
     }
     val bars = loadBars(symbols).filter(col("ticker").isin(symbols: _*))
-    // the grid evaluation is the expensive fold (|tickers|·|grid|
-    // backtests) and is a pure function of the bars + strategy grid —
-    // with a caller-supplied memoTag it is session-memoized under the
-    // [[graft.ops.BuildMemo]] discipline (the bt tier's shared-fold
-    // pattern). The tag must pin EVERYTHING both memos depend on: the
-    // mention corpus (docs), the ticker table, blacklist and k (the
-    // leaderboard memo above) as well as the bars source and every
-    // grid parameter — a caller pinning only the bars would be served
-    // a stale leaderboard for a different corpus. None (the default)
-    // keeps the plain per-call build — live connectors whose loadBars
-    // output mutates must not pass one.
-    val evaluated = memoTag match {
-      case Some(tag) => graft.ops.BuildMemo.frameKeyed(docs.sparkSession,
-        s"commonstocksgrid|$tag") {
-          evaluate(bars, mkStrategy, initialAmount, ranges, gridChunks)
-        }
-      case None => evaluate(bars, mkStrategy, initialAmount, ranges,
-        gridChunks)
-    }
-    best(evaluated)
+    best(evaluate(bars, mkStrategy, initialAmount, ranges, gridChunks))
       .join(broadcast(top.select(col("token").as("ticker"),
         col("cnt").as("mentions"))), Seq("ticker"), "left")
       .select(col("ticker"), col("mentions"), col("best_state"),

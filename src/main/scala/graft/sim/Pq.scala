@@ -49,7 +49,7 @@ object Pq {
     val sub = dim / m
     // session-memoized: the PQ family (encode/topk/ivfpq) shares one
     // sample job + driver train per (corpus, params)
-    graft.ops.BuildMemo.value(corpus, "pqCodebooks",
+    graft.ops.BuildMemo.value(Seq(corpus), "pqCodebooks",
         params =
           s"$idCol|$vecCol|$dim|$m|$kPerSub|$refineSample|$lloydIters") {
       val sample = corpus
@@ -438,7 +438,7 @@ object Pq {
     // share one residual-codebook train. The centroid CONTENT is part
     // of the key (different coarse quantizers train different
     // codebooks even over the same corpus plan).
-    graft.ops.BuildMemo.value(corpus, "pqCodebooksResidual",
+    graft.ops.BuildMemo.value(Seq(corpus), "pqCodebooksResidual",
         params = s"$idCol|$vecCol|$dim|$m|$kPerSub|$refineSample|" +
           s"$lloydIters|${java.util.Arrays.deepToString(
             centroids.asInstanceOf[Array[AnyRef]])}") {
@@ -493,8 +493,7 @@ object Pq {
     // are part of the plan, so the key pins them. Streaming inputs
     // (the StreamingAnn path) and mutable tables return the lazy
     // projection unchanged.
-    if (graft.ops.BuildMemo.memoizable(idx)) graft.ops.BuildMemo.frame(idx)
-    else idx
+    graft.ops.BuildMemo.frame(Seq(idx), "ivfadcindex")(idx)
   }
 
   /** ADC cosine under residual encoding: recon(x) = centroid(cell) +
@@ -620,10 +619,8 @@ object Pq {
       .select(col(idCol), col("cell"), col("codes"))
       .unionByName(fresh)
     // memoized materialization: re-invocations share the merge (same
-    // guard-or-lazy contract as ivfAdcIndex)
-    if (graft.ops.BuildMemo.memoizable(merged))
-      graft.ops.BuildMemo.frame(merged)
-    else merged
+    // memo-or-lazy contract as ivfAdcIndex)
+    graft.ops.BuildMemo.frame(Seq(merged), "ivfadcmerged")(merged)
   }
 
   /** IVFADC composed retriever — [[ivfPqTopK]] with TRUE residual

@@ -350,7 +350,7 @@ object Similarity {
     // session-memoized (BuildMemo): the IVF/IVFPQ/IVFADC family and
     // their incremental/streaming twins all train the same coarse
     // quantizer — one sample job + driver refine per session
-    graft.ops.BuildMemo.value(corpus, "ivfCentroids",
+    graft.ops.BuildMemo.value(Seq(corpus), "ivfCentroids",
         params = s"$idCol|$vecCol|$nCentroids|$refineSample|$lloydIters") {
       val sample = corpus
         .select(col(vecCol), xxhash64(col(idCol)).as("__h"),

@@ -85,38 +85,14 @@ final case class TenPercent(sellMult: Double = 1.05, buyMult: Double = 0.99)
         col("date").cast("timestamp").as("date"),
         col("close").cast("double").as("close"))
       .as[(String, Timestamp, java.lang.Double)]
-    val sm = sellMult
-    val bm = buyMult
+    // the per-ticker fold is the task-local state machine itself
+    val local = graft.opt.LocalTenPercent(sellMult, buyMult)
     slim.groupByKey(_._1).flatMapGroups { (ticker, it) =>
       // full-precision key (graft.model.Time)
-      val rows = it.toArray.sortInPlaceBy(r => graft.model.Time.epochNanos(r._2))
-      if (rows.isEmpty) Iterator.empty
-      else {
-        val out = Vector.newBuilder[SignalBar]
-        def closeAt(i: Int): Double = {
-          val c = rows(i)._3
-          if (c == null) Double.NaN else c.doubleValue()
-        }
-        // buy the first bar unconditionally (custom_strats.py:88)
-        out += SignalBar(ticker, rows(0)._2, closeAt(0), isBuy = true, isSell = false)
-        var anchorIdx = 0
-        var lastMoveSell = false
-        var i = 1
-        while (i < rows.length) {
-          val v = closeAt(i)
-          if (v >= closeAt(anchorIdx) * sm && !lastMoveSell) {
-            out += SignalBar(ticker, rows(i)._2, v, isBuy = false, isSell = true)
-            anchorIdx = i
-            lastMoveSell = true
-          } else if (v <= closeAt(anchorIdx) * bm && lastMoveSell) {
-            out += SignalBar(ticker, rows(i)._2, v, isBuy = true, isSell = false)
-            anchorIdx = i
-            lastMoveSell = false
-          }
-          i += 1
-        }
-        out.result().iterator
-      }
+      val rows = it.toArray.sortBy(r => graft.model.Time.epochNanos(r._2))
+      local.signals(ticker, rows.map(_._2),
+        rows.map(r => if (r._3 == null) Double.NaN else r._3.doubleValue()))
+        .iterator
     }
   }
 }

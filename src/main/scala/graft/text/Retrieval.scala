@@ -137,7 +137,7 @@ object Retrieval {
       queryTextCol: String): (Array[org.apache.spark.sql.Row],
       org.apache.spark.sql.types.StructType, Seq[String]) = {
     val q = queryTerms(queries, queryIdCol, queryTextCol)
-    graft.ops.BuildMemo.value(q, "bm25qterms") {
+    graft.ops.BuildMemo.value(Seq(q), "bm25qterms") {
       val rows = q.collect()
       (rows, q.schema, rows.map(_.getString(1)).distinct.toSeq)
     }
@@ -313,7 +313,7 @@ object Retrieval {
     // session-memoized materialization: re-invocations (and sibling
     // queries scoring the same query set over the same corpus — the
     // topk/eval/ndcg trio) reuse one pruned-postings build
-    val postC = graft.ops.BuildMemo.frame(post)
+    val postC = graft.ops.BuildMemo.frame(Seq(post), "bm25post")(post)
 
     // stats AND per-term df in ONE bounded aggregation over the
     // materialized postings (≤ |query terms| + 1 groups): the null-term
@@ -321,7 +321,7 @@ object Retrieval {
     // sentinel); a term's group counts the docs containing it.
     // Memoized alongside the postings (keyed on the PRE-cut plan — the
     // post-cut LogicalRDD is per-materialization)
-    val agg = graft.ops.BuildMemo.value(post, "bm25agg") {
+    val agg = graft.ops.BuildMemo.value(Seq(post), "bm25agg") {
       postC.groupBy("__w")
         .agg(count(lit(1)).as("__c"), sum(col("__dl")).as("__s"))
         .collect()
@@ -367,8 +367,7 @@ object Retrieval {
     // (or the same base split) — one tokenize+count pass per session
     // instead of one per invocation. Non-memoizable inputs (streaming,
     // mutable tables) return the lazy frame unchanged.
-    if (graft.ops.BuildMemo.memoizable(idx)) graft.ops.BuildMemo.frame(idx)
-    else idx
+    graft.ops.BuildMemo.frame(Seq(idx), "bm25index")(idx)
   }
 
   /** The one-row stats frame for a postings index: (n_docs, sum_dl).
@@ -408,7 +407,7 @@ object Retrieval {
       s"pushTermLimit must be non-negative, got $pushTermLimit")
     val (qRows, qSchema, terms) =
       collectedQueryTerms(queries, queryIdCol, queryTextCol)
-    val st = graft.ops.BuildMemo.value(stats, "bm25statshead") {
+    val st = graft.ops.BuildMemo.value(Seq(stats), "bm25statshead") {
       stats.select(col("n_docs").cast("long"),
         col("sum_dl").cast("long")).head()
     }
@@ -429,11 +428,11 @@ object Retrieval {
       import spark.implicits._
       renamed.join(broadcast(terms.toDF("__w")), Seq("__w"), "left_semi")
     }
-    val postC = graft.ops.BuildMemo.frame(post)
+    val postC = graft.ops.BuildMemo.frame(Seq(post), "bm25probepost")(post)
     // df per query term from the pruned index rows — one bounded
     // aggregation (≤ |query terms| groups), collected once and
     // session-memoized with the pruned postings
-    val dftRows = graft.ops.BuildMemo.value(post, "bm25dft") {
+    val dftRows = graft.ops.BuildMemo.value(Seq(post), "bm25dft") {
       postC.groupBy("__w").agg(count(lit(1)).as("__c"))
         .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
     }
@@ -611,9 +610,7 @@ object Retrieval {
     // memoized materialization: the merged index feeds BOTH the stats
     // recompute and the probe's pruning scan (two consumers, no
     // exchange reuse across them) and re-invocations share the build
-    if (graft.ops.BuildMemo.memoizable(merged))
-      graft.ops.BuildMemo.frame(merged)
-    else merged
+    graft.ops.BuildMemo.frame(Seq(merged), "bm25merged")(merged)
   }
 
   /** Reciprocal-rank fusion (Cormack et al. 2009) — the standard hybrid

@@ -98,7 +98,7 @@ object NaiveBayes {
     // same as the IVF/PQ codebooks): training runs a collect + count
     // aggregation + checkpoint per call; repeated scoring over the same
     // train frame shares one model. Non-memoizable inputs fall through.
-    graft.ops.BuildMemo.value(df, "nbModel",
+    graft.ops.BuildMemo.value(Seq(df), "nbModel",
         params = s"$textCol|$labelCol|$maxVocab") {
       trainBuild(df, textCol, labelCol, maxVocab)
     }

@@ -245,32 +245,12 @@ object TextStats {
     * lm_score null for documents with fewer than two tokens.
     */
   def lmScore(df: DataFrame, idCol: String, textCol: String,
-      trainBuckets: Int = 80, memoTag: Option[String] = None): DataFrame = {
+      trainBuckets: Int = 80): DataFrame = {
     // 0 would train on nothing (T = sum over empty = null → every score
     // null); 100+ scores nothing held-out. Both are misconfigurations,
     // not models.
     require(trainBuckets >= 1 && trainBuckets <= 100,
       s"trainBuckets must be in [1, 100], got $trainBuckets")
-    // The memo lives behind an OPT-IN tag at the call site (the
-    // Optimizer.findCommonStocks discipline; r16 verdict asked the
-    // memo out of the public operator): None — the default — builds
-    // live every call; a gate row that treats the scored corpus as its
-    // session artifact passes a tag. With a tag the key is still the
-    // INPUT plan + params + file digest (BuildMemo.frameFor — the
-    // build runs its count-table checkpoint job during plan
-    // construction, so the output plan cannot be the key).
-    memoTag match {
-      case Some(tag) =>
-        graft.ops.BuildMemo.frameFor(Seq(df), "lmScore",
-            params = s"$idCol|$textCol|$trainBuckets|$tag") {
-          lmScoreBuild(df, idCol, textCol, trainBuckets)
-        }
-      case None => lmScoreBuild(df, idCol, textCol, trainBuckets)
-    }
-  }
-
-  private def lmScoreBuild(df: DataFrame, idCol: String, textCol: String,
-      trainBuckets: Int): DataFrame = {
     val toks = df.select(col(idCol).as("__id"), tokens(col(textCol)).as("__tk"),
       (graft.ops.Sampling.hashBucket(col(idCol), 100) < trainBuckets)
         .as("__train"))
@@ -363,17 +343,24 @@ object TextStats {
     */
   def lmQualityBuckets(df: DataFrame, idCol: String, textCol: String,
       langCol: String, headPct: Int = 33, midPct: Int = 33,
-      trainBuckets: Int = 80, memoTag: Option[String] = None): DataFrame = {
+      trainBuckets: Int = 80): DataFrame =
+    lmBuckets(df, lmScore(df, idCol, textCol, trainBuckets), idCol,
+      langCol, headPct, midPct)
+
+  /** [[lmQualityBuckets]] over an already-scored corpus: `scores` is
+    * [[lmScore]]'s output for `df`, so a caller holding the scored
+    * table (e.g. a session-memoized one) buckets it without re-scoring.
+    */
+  def lmBuckets(df: DataFrame, scores: DataFrame, idCol: String,
+      langCol: String, headPct: Int, midPct: Int): DataFrame = {
     require(headPct > 0 && midPct >= 0 && headPct + midPct <= 100,
       s"percent splits must satisfy 0 < headPct, 0 <= midPct, " +
         s"headPct + midPct <= 100; got $headPct/$midPct")
-    // memoTag threads to the [[lmScore]] build only — the bucket
-    // derivation below (histogram, cuts, tie windows) runs live
-    val scores = lmScore(df, idCol, textCol, trainBuckets, memoTag)
+    val scored = scores
       .filter(col("lm_score").isNotNull)
       .select(col(idCol).as("__sid"), round(col("lm_score"), 6).as("__s"))
     val docs = df.select(col(idCol), col(langCol))
-      .join(scores, col(idCol) === col("__sid"))
+      .join(scored, col(idCol) === col("__sid"))
       .select(col(idCol).as("__bid"), col(langCol).as("__lg"), col("__s"))
     // per-(lang, score6) histogram — the one corpus-sized exchange
     val hist = docs.groupBy(col("__lg"), col("__s"))

@@ -294,8 +294,8 @@ object TimeSeriesOps {
     // and its summary twin in one suite) derives the chained-window
     // funnel once; plan-keyed, so a changed input or parameter set
     // rebuilds
-    val f = graft.ops.BuildMemo.frame(
-      funnel(df, keyCol, typeCol, tsCol, steps, horizonUs))
+    val perKey = funnel(df, keyCol, typeCol, tsCol, steps, horizonUs)
+    val f = graft.ops.BuildMemo.frame(Seq(perKey), "funnel")(perKey)
     val perStep = f.select(explode(array(steps.zipWithIndex.map {
       case (s, i) =>
         struct(lit(i.toLong).as("step_idx"), lit(s).as("step_name"),

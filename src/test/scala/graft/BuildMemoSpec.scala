@@ -5,9 +5,10 @@ import org.apache.spark.sql.functions._
 import graft.ops.BuildMemo
 import graft.text.Retrieval
 
-/** The session-scoped build memo (round-16): memo-hit must be
-  * result-identical to memo-miss, keys must discriminate inputs and
-  * params, and non-memoizable plans (streaming, mutable tables) must
+/** The session-scoped build memo: memo-hit must be result-identical to
+  * memo-miss, keys (input plans + params + input file digest) must
+  * discriminate inputs and params, a rewritten input must never be
+  * served stale, and non-memoizable inputs (streaming, no inputs) must
   * fall through to the unmemoized behavior.
   */
 class BuildMemoSpec extends SparkTestBase {
@@ -57,13 +58,18 @@ class BuildMemoSpec extends SparkTestBase {
 
   test("frame keys discriminate params and inputs") {
     BuildMemo.clear()
-    val a = BuildMemo.frame(docs.filter(col("doc_id") % 3 === 0))
-    val b = BuildMemo.frame(docs.filter(col("doc_id") % 5 === 0))
+    def cut(m: Int, params: String = "") = {
+      val in = docs.filter(col("doc_id") % m === 0)
+      BuildMemo.frame(Seq(in), "discriminate", params)(in)
+    }
+    val a = cut(3)
+    val b = cut(5)
     assert(a.count() != b.count(),
       "different input plans must not share a memo entry")
-    val sameAgain = BuildMemo.frame(docs.filter(col("doc_id") % 3 === 0))
-    assert(sameAgain eq a,
-      "an identical plan must return the SAME materialized frame")
+    assert(cut(3) eq a,
+      "an identical input plan must return the SAME materialized frame")
+    assert(!(cut(3, params = "p2") eq a),
+      "different params must not share a memo entry")
   }
 
   test("trained quantizer models memo-hit and key on centroid content") {
@@ -110,12 +116,108 @@ class BuildMemoSpec extends SparkTestBase {
     } finally spark.sql(s"DROP TABLE IF EXISTS $name")
   }
 
+  /** Write `first`, run the memoized build `memo` twice over fresh
+    * `spark.read.parquet` reads of it, overwrite it with `second` and
+    * run once more: the repeat must hit with the same result (as seen
+    * through `read`), the overwrite must miss and return the build's
+    * result over the new rows.
+    */
+  private def overwriteInvalidates[T <: AnyRef, R](
+      first: org.apache.spark.sql.DataFrame,
+      second: org.apache.spark.sql.DataFrame)(
+      memo: org.apache.spark.sql.DataFrame => T)(read: T => R): Unit = {
+    val dir = java.nio.file.Files.createTempDirectory("memo_overwrite")
+      .resolve("t").toString
+    first.write.mode("overwrite").parquet(dir)
+    BuildMemo.clear()
+    val r1 = memo(spark.read.parquet(dir))
+    val out1 = read(r1)
+    val (h0, m0) = (BuildMemo.hits, BuildMemo.misses)
+    val r2 = memo(spark.read.parquet(dir))
+    assert((r2 eq r1) &&
+      BuildMemo.hits > h0 && BuildMemo.misses == m0,
+      "the same input read twice must memo-hit")
+    assert(read(r2) == out1, "memo-hit diverged from memo-miss")
+    second.write.mode("overwrite").parquet(dir)
+    val r3 = memo(spark.read.parquet(dir))
+    assert(BuildMemo.misses > m0, "an overwritten input must memo-miss")
+    val out3 = read(r3)
+    assert(out3 != out1, "an overwritten input was served the stale build")
+    BuildMemo.clear()
+    assert(read(memo(spark.read.parquet(dir))) == out3,
+      "the rebuilt result differs from a fresh build over the new rows")
+  }
+
+  test("input keying: a BM25 run (MapData literals in its output plan) " +
+      "hits on the same input and misses after an overwrite") {
+    def run(corpus: org.apache.spark.sql.DataFrame) =
+      BuildMemo.frame(Seq(corpus), "bm25-overwrite-probe") {
+        val queries = corpus.filter(col("doc_id") % 2 === 0)
+          .select(col("doc_id"), col("text").as("qtext"))
+        Retrieval.bm25TopK(corpus, "doc_id", "text", queries, "doc_id",
+          "qtext", k = 2)
+      }
+    // an OUTPUT-plan key could never hit here: two builds over the same
+    // input do not canonicalize equal
+    val once = docs.limit(40)
+    val q = once.select(col("doc_id"), col("text").as("qtext"))
+    def plan() = Retrieval.bm25TopK(once, "doc_id", "text", q, "doc_id",
+      "qtext", k = 2).queryExecution.analyzed.canonicalized
+    assert(plan() != plan(), "bm25TopK output plans now compare equal; " +
+      "the comment above is stale")
+    val first = Seq((1L, "apple pie"), (2L, "apple tart"),
+      (3L, "cherry pie"), (4L, "pie")).toDF("doc_id", "text")
+    val second = Seq((1L, "apple pie"), (2L, "cherry cake"),
+      (3L, "cherry pie"), (4L, "cake cake"), (6L, "cherry")).toDF(
+      "doc_id", "text")
+    overwriteInvalidates(first, second)(run) { df =>
+      df.select(col("query_id"), col("doc_id"),
+          round(col("score"), 9).as("s"), col("rank"))
+        .as[(Long, Long, Double, Int)].collect().toSeq.sorted
+    }
+  }
+
+  test("input keying: a backtest fold (lambda-bound mapGroups) hits on " +
+      "the same bars and misses after an overwrite") {
+    import graft.engine.BacktestEngine
+    import graft.strategy.MACross
+    val strategy = MACross(2, 4)
+    def run(bars: org.apache.spark.sql.DataFrame) =
+      BuildMemo.value(Seq(bars), "btfold-overwrite-probe",
+          s"$strategy|10000.0") {
+        BacktestEngine.run(bars, strategy, 10000.0)
+      }
+    def bars(closes: Seq[Double]) = closes.zipWithIndex.map {
+      case (c, i) => ("T", new java.sql.Timestamp(86400000L * (i + 1)), c)
+    }.toDF("ticker", "date", "close")
+    val up = Seq(10.0, 9.0, 8.0, 9.0, 11.0, 13.0, 12.0, 10.0, 8.0, 7.0,
+      9.0, 12.0)
+    overwriteInvalidates(bars(up), bars(up.map(c => 30.0 - c)))(run) { r =>
+      BacktestEngine.finalNetWorth(r).as[(String, Double)].collect().toSeq
+    }
+  }
+
   test("streaming frames are never cut or memoized") {
     implicit val sc = spark.sqlContext
     val input = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, String)]
     val streamDf = input.toDS().toDF("doc_id", "text")
-    assert(!BuildMemo.memoizable(streamDf))
+    BuildMemo.clear()
+    assert(BuildMemo.frame(Seq(streamDf), "stream-probe")(streamDf)
+      .isStreaming, "a streaming input must fall through uncut")
+    var builds = 0
+    (1 to 2).foreach { _ =>
+      BuildMemo.value(Seq(docs, streamDf), "stream-probe") {
+        builds += 1; java.lang.Long.valueOf(builds.toLong)
+      }
+      // no inputs at all: nothing to key on, so nothing is memoized
+      BuildMemo.value(Nil, "no-inputs-probe") {
+        builds += 1; java.lang.Long.valueOf(builds.toLong)
+      }
+    }
+    assert(builds == 4 && BuildMemo.size == 0,
+      s"non-memoizable builds were memoized ($builds builds, " +
+        s"${BuildMemo.size} entries)")
     // bm25Index on a streaming frame must stay lazy/streaming
     assert(Retrieval.bm25Index(streamDf, "doc_id", "text").isStreaming)
   }
@@ -123,18 +225,18 @@ class BuildMemoSpec extends SparkTestBase {
   test("LRU bound holds") {
     BuildMemo.clear()
     (0 until 300).foreach { i =>
-      BuildMemo.value(docs, "lru-probe", params = i.toString) {
+      BuildMemo.value(Seq(docs), "lru-probe", params = i.toString) {
         java.lang.Long.valueOf(i.toLong)
       }
     }
     assert(BuildMemo.size <= 256, s"cache grew past bound: ${BuildMemo.size}")
   }
 
-  test("frameFor: hit ≡ miss, keyed on the INPUT plan, and the build " +
+  test("frame: hit ≡ miss, keyed on the INPUT plan, and the build " +
       "closure runs once") {
     BuildMemo.clear()
     var builds = 0
-    def clustered() = BuildMemo.frameFor(Seq(docs), "framefor-probe",
+    def clustered() = BuildMemo.frame(Seq(docs), "frame-probe",
         params = "p1") {
       builds += 1
       graft.dedup.Dedup.connectedComponents(
@@ -145,10 +247,10 @@ class BuildMemoSpec extends SparkTestBase {
     val warm = clustered().orderBy("id").as[(Long, Long)].collect().toSeq
     assert(builds == 1, s"build closure ran $builds times — the input " +
       "plan key is unstable")
-    assert(warm == cold && cold.nonEmpty, "frameFor hit diverged from miss")
+    assert(warm == cold && cold.nonEmpty, "frame hit diverged from miss")
     // different params → distinct entry (no false sharing)
     var builds2 = 0
-    BuildMemo.frameFor(Seq(docs), "framefor-probe", params = "p2") {
+    BuildMemo.frame(Seq(docs), "frame-probe", params = "p2") {
       builds2 += 1; docs.limit(1)
     }.count()
     assert(builds2 == 1, "distinct params must build separately")
@@ -157,7 +259,7 @@ class BuildMemoSpec extends SparkTestBase {
     val input = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, String)]
     val streamDf = input.toDS().toDF("doc_id", "text")
-    val out = BuildMemo.frameFor(Seq(streamDf), "framefor-stream") {
+    val out = BuildMemo.frame(Seq(streamDf), "frame-stream") {
       streamDf
     }
     assert(out.isStreaming, "streaming input must fall through unmemoized")

@@ -51,6 +51,43 @@ class EngineInvariantsSpec extends SparkTestBase {
     }
   }
 
+  test("engine and task-local evaluator agree on a ticker with leading " +
+      "NaN (pre-IPO) bars") {
+    // the first TenPercent buy lands on a NaN price: the reference's
+    // cumsum(skipna=True) skips that term, so net worth stays finite
+    val prices = Seq(10.0, 11.0, 10.4, 10.0, 9.8, 10.9, 11.6, 11.0, 10.5,
+      12.0, 12.8, 12.1, 11.7, 13.0)
+    val series = Seq(
+      "IPO" -> (Seq.fill(4)(Double.NaN) ++ prices),
+      "FULL" -> prices)
+    val rows = for {
+      (ticker, closes) <- series
+      (c, i) <- closes.zipWithIndex
+    } yield (ticker, new java.sql.Timestamp(86400000L * (i + 1)), c)
+    val nanBars = rows.toDF("ticker", "date", "close")
+    Seq[(graft.strategy.Strategy, graft.opt.LocalStrategy)](
+      TenPercent() -> LocalTenPercent(),
+      MACross(2, 3) -> LocalMACross(2, 3)).foreach { case (strat, local) =>
+      val engineNw = BacktestEngine.finalNetWorth(
+          BacktestEngine.run(nanBars, strat, 10000.0))
+        .as[(String, Double)].collect().toMap
+      series.foreach { case (ticker, closes) =>
+        val dates = closes.indices
+          .map(i => new java.sql.Timestamp(86400000L * (i + 1))).toArray
+        val localNw = graft.opt.LocalBacktest.finalNetWorth(ticker, dates,
+          closes.toArray, local, 10000.0)
+        assert(!engineNw(ticker).isNaN &&
+          java.lang.Double.compare(engineNw(ticker), localNw) == 0,
+          s"$strat $ticker engine=${engineNw(ticker)} local=$localNw")
+      }
+    }
+    assert(BacktestEngine.finalNetWorth(
+        BacktestEngine.run(nanBars.filter(col("ticker") === "IPO"),
+          TenPercent(), 10000.0))
+      .as[(String, Double)].collect().toSeq == Seq("IPO" -> 10000.0),
+      "a buy at a NaN price must leave the net worth at the capital")
+  }
+
   test("shares_owned never negative for long-only MACross flow") {
     val res = BacktestEngine.run(bars, MACross(5, 20), 10000.0)
     val negatives = res.daily.filter(col("shares_owned") < 0).count()
